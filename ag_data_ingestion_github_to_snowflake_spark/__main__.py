@@ -12,9 +12,16 @@ Mirrors the reference's ``main()`` argparse surface
                     sink write (the reference's S3-upload skip).
 
 Spark-first deltas from the reference (documented in SURVEY §1.1):
-the envelope JSON document becomes a flat partitioned table plus a
-``_run_metrics`` table, and the watermark commits once per batch
-AFTER the sink write succeeds (the reference commits per row).
+the envelope JSON document becomes a flat table plus a ``_run_metrics``
+table, and the watermark commits once per batch AFTER the sink write
+succeeds (the reference commits per row).
+
+One batch is one pass: the sink write is the only action over the
+batch, the enrichment runs inside it, and the run counters come from
+an ``Observation`` it fills. Like the reference's one file per run
+under ``yyyy/mm/dd``, each run appends under the ``year/month/day`` of
+its own run timestamp, which is also the metrics row's
+``extraction_date``.
 """
 
 from __future__ import annotations
@@ -22,7 +29,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+from datetime import datetime, timezone
 
 from ag_data_ingestion_github_to_snowflake_spark.config import EngineConfig
 
@@ -73,8 +82,11 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     Separated from ``main()`` so tests can drive it with an injected
     SparkSession and read the summary dict directly.
     """
+    from pyspark.sql import functions as F
+
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         incremental_extract,
+        run_metrics_row,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
         RestSourceConfig,
@@ -122,8 +134,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     state = FileWatermark(state_path)
     if args.use_cache and os.path.exists(sink_path):
         # A3: bronze cache seed — never re-fetch ids already sunk.
-        from pyspark.sql import functions as F
-
         cached_max = (
             spark.read.parquet(sink_path).agg(F.max("id")).collect()[0][0]
         )
@@ -133,8 +143,8 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     rest_cfg = RestSourceConfig(
         per_page=env_cfg.per_page,
         max_requests_per_run=env_cfg.max_requests_per_run,
-        detail_partitions=env_cfg.detail_partitions,
     )
+    run_ts = datetime.now(timezone.utc)
     result = incremental_extract(
         spark,
         transport,
@@ -144,11 +154,24 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         commit_state=False,  # commit AFTER the sink write below
     )
 
-    valid_count = result.valid.count()
-    invalid_count = result.invalid.count()
-    if not skip_upload and valid_count:
-        partitioned_append(result.valid, sink_path, ts_col="updated_at")
-        write_run_metrics(result.metrics, sink_path + "_run_metrics")
+    if skip_upload:
+        result.valid.write.format("noop").mode("overwrite").save()
+        counters = result.observation.get
+    else:
+        new_sink = not os.path.exists(sink_path)
+        partitioned_append(result.valid, sink_path, ts_col=F.lit(run_ts))
+        counters = result.observation.get
+        if counters["valid_count"]:
+            metrics = run_metrics_row(
+                spark, counters, result.api_calls, test_mode, run_ts
+            )
+            write_run_metrics(metrics, sink_path + "_run_metrics")
+        elif new_sink:
+            # A batch with no valid row writes no data file, only
+            # _SUCCESS; a sink without a schema would fail the next
+            # --use-cache read.
+            shutil.rmtree(sink_path)
+    valid_count = counters["valid_count"]
     # Watermark advances only once the batch is durably sunk (or the
     # run explicitly skipped the sink) — a failed write re-fetches.
     state.set(result.new_watermark)
@@ -156,7 +179,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     summary = {
         "success": True,
         "valid_count": valid_count,
-        "invalid_count": invalid_count,
+        "invalid_count": counters["invalid_count"],
         "new_watermark": result.new_watermark,
         "uploaded": bool(not skip_upload and valid_count),
         "sink_path": sink_path if not skip_upload else None,

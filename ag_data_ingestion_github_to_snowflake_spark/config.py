@@ -37,7 +37,6 @@ class EngineConfig:
     state_path: str = "/tmp/ag_spark_state/last_repo_id.txt"
     test_mode: bool = False
     skip_upload: bool = False
-    detail_partitions: int = 8
 
     @classmethod
     def from_env(cls, env: dict | None = None) -> EngineConfig:
@@ -54,5 +53,4 @@ class EngineConfig:
             state_path=e.get("STATE_PATH", "/tmp/ag_spark_state/last_repo_id.txt"),
             test_mode=_bool(e.get("TEST_MODE"), False),
             skip_upload=_bool(e.get("SKIP_UPLOAD"), False),
-            detail_partitions=int(e.get("DETAIL_PARTITIONS", "8")),
         )

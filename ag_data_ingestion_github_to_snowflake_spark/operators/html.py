@@ -120,8 +120,9 @@ def pagerank(
                    (rank(u) div out_deg(u))) div d_den
 
     Returns ``(node, rank)`` with ``rank`` scaled by ``scale``.
-    ``checkpoint`` truncates lineage per round (eager localCheckpoint,
-    same pattern as ``connected_components``); disable for plan tests.
+    ``checkpoint`` truncates lineage per round (lazy localCheckpoint,
+    ``eager=False``, materialized by the next round's job, as in
+    ``connected_components``' loop); disable for plan tests.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")

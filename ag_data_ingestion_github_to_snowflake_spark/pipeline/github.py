@@ -6,15 +6,17 @@ Covers SURVEY §2 A10 (flatten), A12/A13 (validation split), A14 (error
 row skip), A15 (run counters), A21 (resume/at-least-once), composed in
 ``incremental_extract`` — the whole of the reference's
 ``extract_repositories`` (/root/reference/src/extract_github_data.py:
-607-762) as one lazily-planned DataFrame pipeline.
+607-762) as one lazily-planned DataFrame pipeline that a single action
+(the sink write) runs.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -43,6 +45,15 @@ REQUIRED_FIELDS = (
     "owner_type",
     "owner_avatar_url",
     "owner_url",
+)
+
+# The counters ``observed_run_metrics`` collects, in ``_run_metrics`` order.
+RUN_COUNTERS = (
+    "total_processed",
+    "valid_count",
+    "invalid_count",
+    "start_repo_id",
+    "last_repo_id",
 )
 
 
@@ -104,34 +115,15 @@ def latest_snapshot(df: DataFrame, key: str = "id", order_col: str = "updated_at
     )
 
 
-def run_metrics(
-    flat: DataFrame,
-    api_calls: int = 0,
-    cache_hits: int = 0,
-    test_mode: bool = False,
-) -> DataFrame:
-    """A15: the run-summary counters as one aggregate row
-    (processed/valid/invalid + id range; reference :730-742)."""
-    pred = valid_predicate()
-    return flat.agg(
-        F.count("*").alias("total_processed"),
-        F.sum(F.when(pred, 1).otherwise(0)).alias("valid_count"),
-        F.sum(F.when(~pred, 1).otherwise(0)).alias("invalid_count"),
-        F.min("id").alias("start_repo_id"),
-        F.max("id").alias("last_repo_id"),
-        F.lit(api_calls).alias("api_calls"),
-        F.lit(cache_hits).alias("cache_hits"),
-        F.lit(test_mode).alias("test_mode"),
-        F.current_timestamp().alias("extraction_date"),
-    )
-
-
 @dataclass
 class ExtractResult:
     valid: DataFrame
     invalid: DataFrame
-    metrics: DataFrame
+    # The A15 counters of ``observed_run_metrics``, filled by the first
+    # action over the batch; ``.get`` blocks until then.
+    observation: Observation
     new_watermark: int
+    api_calls: int
 
 
 def incremental_extract(
@@ -142,40 +134,41 @@ def incremental_extract(
     max_pages: int = 1,
     commit_state: bool = True,
 ) -> ExtractResult:
-    """The full reference pipeline as one Spark job (A1-A15, A21).
+    """The full reference pipeline as one lazily-planned batch (A1-A15, A21).
 
     state-read -> paginated list scan -> budget limit -> distributed
-    detail enrichment -> flatten -> validate split -> dedupe on id ->
-    metrics. The watermark commits once per batch (not per row as the
-    reference does, :714) and only AFTER the batch has materialized —
-    the outputs are persisted and computed before ``state.set``, so a
-    failed enrichment job aborts with the watermark untouched and the
-    next run re-fetches the batch. Idempotency comes from
-    ``latest_snapshot`` on id — the documented at-least-once design
-    (README.md:121-129) made exactly-once at the table level. Callers
-    writing to durable sinks should pass ``commit_state=False`` and
-    commit the watermark themselves after the sink write succeeds.
+    detail enrichment -> flatten -> dedupe on id -> observed counters
+    -> validate split. Nothing is persisted: every action over
+    ``valid`` or ``invalid`` runs the enrichment again, so a caller
+    runs exactly one (the sink write), and the counters ride on it.
+
+    The watermark commits once per batch (not per row as the reference
+    does, :714) and only AFTER an action over the batch has succeeded,
+    so a failed enrichment job aborts with the watermark untouched and
+    the next run re-fetches the batch. With ``commit_state`` that
+    action is a ``noop`` write run here; callers writing to durable
+    sinks pass ``commit_state=False`` and commit the watermark after
+    their sink write. Idempotency comes from ``latest_snapshot`` on id
+    — the documented at-least-once design (README.md:121-129) made
+    exactly-once at the table level.
     """
     config = config or RestSourceConfig()
     since = state.get()
-    list_df, new_wm = list_scan_df(spark, transport, since, config, max_pages)
-    raw = enrich_details(list_df, transport, config)
-    flat = latest_snapshot(flatten_repos(raw), "id", "updated_at")
-    flat = flat.persist()
+    list_df, new_wm, api_calls = list_scan_df(spark, transport, since, config, max_pages)
+    raw = enrich_details(list_df, transport)
+    flat, observation = observed_run_metrics(latest_snapshot(flatten_repos(raw)))
     valid, invalid = validation_split(flat)
-    metrics = run_metrics(flat)
     if commit_state:
-        flat.count()  # force the fetch/flatten to succeed first
+        flat.write.format("noop").mode("overwrite").save()
         state.set(new_wm)
-    return ExtractResult(valid=valid, invalid=invalid, metrics=metrics, new_watermark=new_wm)
+    return ExtractResult(valid, invalid, observation, new_wm, api_calls)
 
 
-def observed_run_metrics(flat: DataFrame):
+def observed_run_metrics(flat: DataFrame) -> tuple[DataFrame, Observation]:
     """A15 counters as a zero-extra-scan ``Observation``.
 
-    :func:`run_metrics` recomputes the counters with a second aggregate
-    over the data — at 100 TB that is a second full pass over the
-    warehouse write's input. ``df.observe`` instead piggybacks the
+    A second aggregate over the data would be a second full pass over
+    the sink write's input. ``df.observe`` instead piggybacks the
     counters on whatever action consumes the returned DataFrame (the
     sink write itself): accumulator-style, exactly-once per action, no
     extra job.
@@ -183,16 +176,37 @@ def observed_run_metrics(flat: DataFrame):
     Returns ``(observed_df, observation)`` — write ``observed_df``,
     then read ``observation.get`` for the metrics dict.
     """
-    from pyspark.sql import Observation
-
     pred = valid_predicate()
     obs = Observation("run_metrics")
     observed = flat.observe(
         obs,
         F.count(F.lit(1)).alias("total_processed"),
-        F.sum(F.when(pred, 1).otherwise(0)).alias("valid_count"),
-        F.sum(F.when(~pred, 1).otherwise(0)).alias("invalid_count"),
+        F.count(F.when(pred, 1)).alias("valid_count"),
+        F.count(F.when(~pred, 1)).alias("invalid_count"),
         F.min("id").alias("start_repo_id"),
         F.max("id").alias("last_repo_id"),
     )
     return observed, obs
+
+
+def run_metrics_row(
+    spark: SparkSession,
+    counters: dict,
+    api_calls: int,
+    test_mode: bool,
+    extraction_date: datetime,
+) -> DataFrame:
+    """A15 run-summary row (reference :730-742) from the observed
+    counters: one row of literals, planned and written in the JVM.
+    ``cache_hits`` stays 0: every run fetches past the watermark."""
+
+    def lit(name: str, value, type_: str):
+        return F.lit(value).cast(type_).alias(name)
+
+    return spark.range(1).select(
+        *(lit(k, counters[k], "bigint") for k in RUN_COUNTERS),
+        lit("api_calls", api_calls, "int"),
+        lit("cache_hits", 0, "int"),
+        lit("test_mode", test_mode, "boolean"),
+        lit("extraction_date", extraction_date, "timestamp"),
+    )

@@ -26,6 +26,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import write_marker
+
 
 def write_bucketed(
     df: DataFrame,
@@ -90,8 +92,7 @@ def _ensure_bucketed(
     )
     if not fresh:
         write_bucketed(df, table, key, buckets, path)
-        with open(marker, "w") as f:
-            f.write(fingerprint)
+        write_marker(marker, fingerprint)
         return spark.table(table)
     if not spark.catalog.tableExists(table):
         cols = ", ".join(

@@ -15,8 +15,8 @@ The *detail enrichment* — the expensive part, one call per row — runs
 distributed via ``mapInPandas``: each executor partition owns an HTTP
 client and fetches its rows' details in parallel across partitions
 (the reference does this serially at 1 row/s; Spark parallelizes it to
-#partitions concurrent streams while a token-bucket throttle enforces
-the per-run budget).
+min(task slots, rows) concurrent streams while the list scan's row cap
+enforces the per-run budget).
 
 The transport is injectable (callable) so tests replay canned JSON
 (the reference's cache-file format, :293-344) without any network; the
@@ -105,7 +105,6 @@ class RestSourceConfig:
 
     per_page: int = 100  # REPOS_PER_PAGE (API max)
     max_requests_per_run: int = 60  # MAX_REQUESTS_PER_RUN
-    detail_partitions: int = 8  # parallel enrichment streams
 
 
 def fetch_repo_list(
@@ -146,10 +145,27 @@ def list_scan_df(
     since: int,
     config: RestSourceConfig | None = None,
     max_pages: int = 1,
-) -> tuple[DataFrame, int]:
-    """List scan as a DataFrame + new watermark (A1 + A11 budget limit)."""
+) -> tuple[DataFrame, int, int]:
+    """List scan as a DataFrame (A1 + A11 budget limit).
+
+    Returns ``(list_df, new_watermark, api_calls)``. ``api_calls`` is
+    the list pages requested plus one detail lookup per returned row,
+    which is what :func:`enrich_details` spends on this frame.
+
+    The frame is built from a pandas frame over Arrow: a Python-list
+    ``createDataFrame`` would start a Python worker for every
+    parallelize slice. It comes out in min(task slots, rows)
+    partitions, so enrichment runs one HTTP stream per slot and never
+    starts a task without rows; the API budget (5,000 calls an hour)
+    never needs more streams than slots.
+    """
+    import pandas as pd
+
     config = config or RestSourceConfig()
     rows, _ = fetch_repo_list(transport, since, config.per_page, max_pages)
+    # fetch_repo_list stops after the first page that is not full, so it
+    # requested one page per full page plus that last one.
+    pages = min(max_pages, len(rows) // config.per_page + 1)
     # Budget: reserve one call per list page (conservative if the scan
     # stopped early), the rest are detail-call slots.
     budget = max(config.max_requests_per_run - max_pages, 0)
@@ -157,37 +173,33 @@ def list_scan_df(
     # The watermark must never advance past rows the budget discarded:
     # an empty batch keeps the caller's watermark unchanged.
     watermark = rows[-1]["id"] if rows else since
-    df = spark.createDataFrame(rows, LIST_SCHEMA) if rows else spark.createDataFrame([], LIST_SCHEMA)
-    return df, watermark
+    pdf = pd.DataFrame(rows, columns=LIST_SCHEMA.fieldNames())
+    df = spark.createDataFrame(pdf, LIST_SCHEMA)
+    width = min(spark.sparkContext.defaultParallelism, len(rows))
+    if width > 1:
+        df = df.repartition(width)
+    return df, watermark, pages + len(rows)
 
 
-def enrich_details(
-    list_df: DataFrame,
-    transport: Transport,
-    config: RestSourceConfig | None = None,
-) -> DataFrame:
+def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
     """A2: distributed point-lookup enrichment via mapInPandas.
 
-    Each partition drives its own transport connection; a failed or
-    404 lookup yields no row (A14 skip semantics). The reference does
-    this loop serially on one thread (:677-714); here partitions fetch
-    concurrently and the output is the *nested raw* record, flattening
-    happens downstream (pipeline.github.flatten_repos).
+    Each partition of ``list_df`` drives its own transport connection
+    (``list_scan_df`` sizes them); a failed or 404 lookup yields no row
+    (A14 skip semantics). The reference does this loop serially on one
+    thread (:677-714); here partitions fetch concurrently and the
+    output is the *nested raw* record, flattening happens downstream
+    (pipeline.github.flatten_repos).
     """
     import pandas as pd  # executor-side import
-
-    config = config or RestSourceConfig()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for _, row in pdf.iterrows():
-                status, payload = transport(
-                    f"/repos/{row['owner_login']}/{row['name']}", {}
-                )
-                if status != 200 or payload is None:
+            for login, name in zip(pdf["owner_login"], pdf["name"]):
+                status, p = transport(f"/repos/{login}/{name}", {})
+                if status != 200 or p is None:
                     continue  # 404 / error row-skip (:480-491)
-                p = payload
                 owner = p.get("owner") or {}
                 out.append(
                     {
@@ -213,10 +225,7 @@ def enrich_details(
                 {f.name: pd.Series(dtype="object") for f in RAW_DETAIL_SCHEMA.fields}
             )
 
-    return (
-        list_df.repartition(config.detail_partitions)
-        .mapInPandas(kernel, RAW_DETAIL_SCHEMA)
-    )
+    return list_df.mapInPandas(kernel, RAW_DETAIL_SCHEMA)
 
 
 @dataclass

@@ -13,6 +13,7 @@ kernel is Arrow-batched pandas per key-group per batch.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -184,6 +185,12 @@ CEP_STATE_SCHEMA = T.StructType(
 _CEP_RANK = {"view": 0, "click": 1, "purchase": 2}
 
 
+def _eid_key(eid) -> float:
+    """event_id is only a tie-break sort key: a null one (None, or NaN
+    in a float column) sorts last, as pandas ``sort_values`` put it."""
+    return math.inf if eid is None or eid != eid else int(eid)
+
+
 def make_funnel_cep_kernel(window_us: int):
     """CEP kernel: per user, emit the FIRST purchase preceded (at or
     before, ties inclusive) by a click that itself had a view at or
@@ -221,7 +228,7 @@ def make_funnel_cep_kernel(window_us: int):
             # Interleaved A/B ×3 at sf0.1: [3.52,3.67,3.78] s →
             # [3.21,3.22,3.30] s, emitted matches identical.
             rows = sorted(
-                (int(ts), _CEP_RANK[et], int(eid))
+                (int(ts), _CEP_RANK[et], _eid_key(eid))
                 for ts, et, eid in zip(
                     pdf["ts_us"].values,
                     pdf["event_type"].values,

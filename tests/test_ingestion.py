@@ -6,6 +6,7 @@ idempotent dedup, partitioned sink layout, rate budget.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -29,26 +30,39 @@ from ag_data_ingestion_github_to_snowflake_spark.sources.state import (
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
-CFG = RestSourceConfig(per_page=50, max_requests_per_run=1000, detail_partitions=4)
+CFG = RestSourceConfig(per_page=50, max_requests_per_run=1000)
 
 
 def test_list_scan_pagination_and_watermark(spark):
     tr = StubTransport(n_repos=120)
-    df, wm = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
+    df, wm, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
     assert df.count() == 100  # 2 pages x 50
     assert wm == 100
     # resume: next scan starts after the watermark
-    df2, wm2 = list_scan_df(spark, tr, since=wm, config=CFG, max_pages=2)
+    df2, wm2, _ = list_scan_df(spark, tr, since=wm, config=CFG, max_pages=2)
     ids = [r.id for r in df2.select("id").orderBy("id").collect()]
     assert ids[0] == 101 and wm2 == 120
 
 
+def test_stub_serves_a_page_of_a_huge_universe_quickly():
+    """A list page costs per_page rows, not the size of the universe."""
+    n = 10**9
+    tr = StubTransport(n_repos=n)
+    t0 = time.perf_counter()
+    status, page = tr("/repositories", {"since": 0, "per_page": 100})
+    assert time.perf_counter() - t0 < 0.05
+    assert status == 200 and [r["id"] for r in page] == list(range(1, 101))
+    _, tail = tr("/repositories", {"since": n - 3, "per_page": 100})
+    assert [r["id"] for r in tail] == [n - 2, n - 1, n]
+
+
 def test_budget_limit_truncates(spark):
     tr = StubTransport(n_repos=120)
-    cfg = RestSourceConfig(per_page=50, max_requests_per_run=11, detail_partitions=2)
-    df, wm = list_scan_df(spark, tr, since=0, config=cfg, max_pages=1)
+    cfg = RestSourceConfig(per_page=50, max_requests_per_run=11)
+    df, wm, calls = list_scan_df(spark, tr, since=0, config=cfg, max_pages=1)
     assert df.count() == 10  # budget-1 detail slots (reference :630,:662)
     assert wm == 10  # watermark only advances over fetched rows
+    assert calls == 11  # the whole budget: one page, ten detail lookups
 
 
 def test_exhausted_budget_never_advances_watermark(spark):
@@ -56,16 +70,17 @@ def test_exhausted_budget_never_advances_watermark(spark):
     move the watermark past unprocessed rows (rows would be skipped
     forever otherwise)."""
     tr = StubTransport(n_repos=120)
-    cfg = RestSourceConfig(per_page=50, max_requests_per_run=1, detail_partitions=2)
-    df, wm = list_scan_df(spark, tr, since=7, config=cfg, max_pages=1)
+    cfg = RestSourceConfig(per_page=50, max_requests_per_run=1)
+    df, wm, calls = list_scan_df(spark, tr, since=7, config=cfg, max_pages=1)
     assert df.count() == 0
     assert wm == 7  # unchanged
+    assert calls == 1  # the page was requested; no detail lookup
 
 
 def test_enrichment_skips_404_and_flattens(spark):
     tr = StubTransport(n_repos=60)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
-    raw = enrich_details(df, tr, CFG)
+    df, _, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
+    raw = enrich_details(df, tr)
     flat = flatten_repos(raw)
     rows = {r.id: r for r in flat.collect()}
     assert 19 not in rows and 38 not in rows and 57 not in rows  # 404s skipped
@@ -79,8 +94,8 @@ def test_enrichment_skips_404_and_flattens(spark):
 
 def test_validation_split_counts(spark):
     tr = StubTransport(n_repos=100)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
-    flat = flatten_repos(enrich_details(df, tr, CFG))
+    df, _, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
+    flat = flatten_repos(enrich_details(df, tr))
     valid, invalid = validation_split(flat)
     fetched = [i for i in range(1, 101) if i % 19 != 0]
     bad = [i for i in fetched if i % 13 == 0 or i % 17 == 0]
@@ -93,8 +108,8 @@ def test_validation_split_counts(spark):
 
 def test_latest_snapshot_idempotent(spark):
     tr = StubTransport(n_repos=30)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG)
-    flat = flatten_repos(enrich_details(df, tr, CFG))
+    df, _, _ = list_scan_df(spark, tr, since=0, config=CFG)
+    flat = flatten_repos(enrich_details(df, tr))
     doubled = flat.unionByName(flat)  # at-least-once refetch
     deduped = latest_snapshot(doubled)
     assert deduped.count() == flat.count()
@@ -104,14 +119,15 @@ def test_latest_snapshot_idempotent(spark):
 def test_incremental_extract_end_to_end_with_resume(spark, tmp_path):
     tr = StubTransport(n_repos=80)
     state = FileWatermark(str(tmp_path / "wm.txt"))
-    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000, detail_partitions=2)
+    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000)
 
     r1 = incremental_extract(spark, tr, state, cfg, max_pages=1)
     assert r1.new_watermark == 40
     assert state.get() == 40
-    m = r1.metrics.collect()[0]
-    assert m.total_processed == r1.valid.count() + r1.invalid.count()
-    assert m.start_repo_id >= 1 and m.last_repo_id <= 40
+    m = r1.observation.get
+    assert m["total_processed"] == r1.valid.count() + r1.invalid.count()
+    assert m["start_repo_id"] >= 1 and m["last_repo_id"] <= 40
+    assert r1.api_calls == 1 + 40  # one list page, one detail call per row
 
     r2 = incremental_extract(spark, tr, state, cfg, max_pages=1)
     assert r2.new_watermark == 80
@@ -121,8 +137,8 @@ def test_incremental_extract_end_to_end_with_resume(spark, tmp_path):
 
 def test_partitioned_sink_layout(spark, tmp_path):
     tr = StubTransport(n_repos=40)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG)
-    flat = flatten_repos(enrich_details(df, tr, CFG))
+    df, _, _ = list_scan_df(spark, tr, since=0, config=CFG)
+    flat = flatten_repos(enrich_details(df, tr))
     out = str(tmp_path / "sink")
     partitioned_append(flat, out, ts_col="updated_at")
     years = [d for d in os.listdir(out) if d.startswith("year=")]
@@ -178,7 +194,7 @@ def test_incremental_extract_resume_from_remote_kv_state(spark):
     assert state.get() == 0  # missing key -> default
 
     tr = StubTransport(n_repos=80)
-    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000, detail_partitions=2)
+    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000)
 
     r1 = incremental_extract(spark, tr, state, cfg, max_pages=1)
     assert r1.new_watermark == 40
@@ -388,11 +404,9 @@ def test_compact_table_zorder_bounds_both_columns(spark, tmp_path):
 
 
 def test_observed_run_metrics_single_pass(spark, tmp_path):
-    """Observation counters ride the sink write (no second scan) and
-    match the two-pass run_metrics aggregate."""
+    """Observation counters ride the sink write (no second scan)."""
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         observed_run_metrics,
-        run_metrics,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
         RAW_DETAIL_SCHEMA,
@@ -405,12 +419,13 @@ def test_observed_run_metrics_single_pass(spark, tmp_path):
 
     observed, obs = observed_run_metrics(flat)
     observed.write.mode("overwrite").parquet(str(tmp_path / "out"))  # the one action
-    got = obs.get
-    want = run_metrics(flat).collect()[0]
-    assert got["total_processed"] == want.total_processed == 5
-    assert got["valid_count"] == want.valid_count == 4
-    assert got["invalid_count"] == want.invalid_count == 1
-    assert got["start_repo_id"] == 1 and got["last_repo_id"] == 5
+    assert obs.get == {
+        "total_processed": 5,
+        "valid_count": 4,
+        "invalid_count": 1,
+        "start_repo_id": 1,
+        "last_repo_id": 5,
+    }
 
 
 def test_incremental_extract_resume_from_env_state(spark):
@@ -424,7 +439,7 @@ def test_incremental_extract_resume_from_env_state(spark):
     assert state.get() == 0  # unset var -> default
 
     tr = StubTransport(n_repos=80)
-    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000, detail_partitions=2)
+    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000)
 
     r1 = incremental_extract(spark, tr, state, cfg, max_pages=1)
     assert r1.new_watermark == 40

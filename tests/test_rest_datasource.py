@@ -54,7 +54,7 @@ def test_id_range_sharding_no_overlap(spark):
 def test_connector_matches_driver_side_scan(spark):
     tr = StubTransport(n_repos=120)
     cfg = RestSourceConfig(per_page=60, max_requests_per_run=1000)
-    drv, _ = list_scan_df(spark, tr, since=0, config=cfg, max_pages=2)
+    drv, _, _ = list_scan_df(spark, tr, since=0, config=cfg, max_pages=2)
     con = read_df(
         spark,
         since=0,

@@ -174,6 +174,15 @@ def test_funnel_cep_kernel_semantics():
     )
     assert st.get == (0, 1, 0, 0)
 
+    # A null event_id (NaN once the column holds a null) is only a
+    # tie-break key: it sorts last within its (ts, stage) and matches.
+    st = FakeState()
+    out = list(
+        kernel((4,), iter([batch([(5, "click", None), (3, "view", 1),
+                                  (5, "click", 7), (9, "purchase", None)])]), st)
+    )
+    assert out[0].values.tolist() == [[4, 3, 5, 9]]
+
 
 def test_transform_with_state_matches_v1(spark, tmp_path):
     """transformWithStateInPandas (arbitrary-state v2, RocksDB-backed)

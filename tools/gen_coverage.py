@@ -31,7 +31,7 @@ MODULE_EVIDENCE = {
     "A12": ["pipeline/github.py:valid_predicate", "tests/test_operators.py::test_validation_split_partitions_input"],
     "A13": ["pipeline/github.py:validation_split", "tests/test_ingestion.py::test_validation_split_counts"],
     "A14": ["sources/rest.py:enrich_details 404 branch", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
-    "A15": ["pipeline/github.py:run_metrics", "tests/test_ingestion.py::test_incremental_extract_end_to_end_with_resume"],
+    "A15": ["pipeline/github.py:observed_run_metrics", "pipeline/github.py:run_metrics_row", "tests/test_cli.py::test_cli_run_metrics_are_truthful"],
     "A16": [], "A17": [], "A18": [], "A19": [],
     "A20": ["sources/rest.py:HeaderRateLimitGovernor (X-RateLimit parse + reset backoff)", "tests/test_rate_governor.py"],
     "A21": ["pipeline/github.py:incremental_extract + latest_snapshot", "tests/test_ingestion.py::test_latest_snapshot_idempotent"],
